@@ -1,27 +1,45 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SURVEY §2 query at SPARK_GRAFT_SF_DIR,
   * prints ONE JSON line. Session/JVM warm-up (codegen compiler, parquet
   * footer readers, shuffle machinery) runs before the clock starts so each
   * query's time reflects the query, not first-touch initialization.
   */
 object Bench {
+  /** Whether `sfDir` is the graded bench SF (basename `sf0.1`): the 2x
+    * gate and the BENCH_LAST.json/BENCH_SUMMARY.json sinks apply only
+    * there. A basename compare, not endsWith: a trailing slash must not
+    * disable the gate, and an unrelated dir whose name merely ends in
+    * "sf0.1" must not enable it. */
+  private[graft] def isGradedSf(sfDir: String): Boolean =
+    sfDir.split('/').filter(_.nonEmpty).lastOption.contains("sf0.1")
+
   /** Which sidecar files a run may refresh (pure so BenchSinkSpec can
-    * gate it; round-11 verdict item 1). EVERY run writes BENCH_LAST.json
-    * — the driver/judge can always read the latest reading — but the
+    * gate it). A run at any SF other than the graded one is a smoke run
+    * and writes only BENCH_SMOKE.json, so it cannot replace the latest
+    * graded reading. A graded run always writes BENCH_LAST.json, but the
     * canonical BENCH_SUMMARY.json is refreshed ONLY by a full-suite run
     * under the quiet frozen protocol (quiet_bench.sh sets
-    * SPARK_GRAFT_BENCH_PROTOCOL=quiet after arming the vmstat trace).
-    * The round-10 driver's hot full-suite run clobbered the 156.2 s
-    * validation-F record, proving "full-suite" alone is not a
-    * sufficient guard for the frozen-protocol yardstick. */
-  private[graft] def summarySinks(targeted: Boolean,
-                                  protocol: Option[String]): Seq[String] =
-    if (!targeted && protocol.contains("quiet"))
+    * SPARK_GRAFT_BENCH_PROTOCOL=quiet after arming the vmstat trace): a
+    * hot full-suite run once clobbered the 156.2 s validation-F record,
+    * so "full-suite" alone is not a sufficient guard for the
+    * frozen-protocol yardstick. */
+  private[graft] def summarySinks(targeted: Boolean, protocol: Option[String],
+                                  gradedSf: Boolean): Seq[String] =
+    if (!gradedSf) Seq("BENCH_SMOKE.json")
+    else if (!targeted && protocol.contains("quiet"))
       Seq("BENCH_LAST.json", "BENCH_SUMMARY.json")
     else Seq("BENCH_LAST.json")
+
+  /** The merged sidecar's `"errors"` fragment: query name → the first
+    * failure's exception class and message, JSON-escaped. Empty when no
+    * query failed, so a clean run's artifacts keep their shape. */
+  private[graft] def errorsFragment(errors: Seq[(String, Throwable)]): String =
+    if (errors.isEmpty) ""
+    else errors.map { case (q, e) =>
+      s"${Verify.jsonString(q)}:${Verify.jsonString(
+        s"${e.getClass.getName}: ${e.getMessage}")}"
+    }.mkString(""","errors":{""", ",", "}")
 
   /** (steal, total) jiffies from /proc/stat's aggregate cpu line, or
     * None where unreadable. Sampled immediately before/after each run,
@@ -149,29 +167,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    // Scan-split granularity: at the larger local SFs (sf1/sf10) the
-    // default 128m yields fewer splits than cores, forcing the wide()
-    // repartition's full-payload shuffle; 16m gives the scan itself
-    // enough parallelism, like any real multi-file production table.
-    val maxPart = sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", maxPart)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // shared checkpoint-checksum default — ONE definition in
-      // GraftSession (r16; closes the r15 Bench-only conf skew: Verify
-      // and Bench now grade the same streaming configuration).
-      // SPARK_GRAFT_CKPT_CHECKSUM=true restores the Spark 4.1 default
-      // for corruption-audit runs (r15 measurement: OPTIMIZATION_r15.md).
-      .config(GraftSession.CkptChecksumKey, GraftSession.ckptChecksumDefault)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forTool("graft-bench")
 
     // ADVICE r10: refuse a stray GRAFT_NMEDIA (it rescales corpus AND
     // oracles together, so nothing else would flag it) and stamp the
@@ -237,11 +233,14 @@ object Bench {
     // task 2): the WORST run's steal/canary over the query's own window
     // — if even one of the min-of-N runs was contaminated, the flag says
     // so itself. Plus st15's phase split from the run that won the min.
+    // error: the first failed run's exception, kept for the artifacts
     case class QueryStats(min: Double, worstSteal: Option[Double],
                           worstCanary: Option[Double],
-                          st15Phases: Option[(Double, Double)])
+                          st15Phases: Option[(Double, Double)],
+                          error: Option[Throwable])
     val detailed =
       try selected.map { case (name, fn) =>
+        var error = Option.empty[Throwable]
         val runsData = (1 to runs).flatMap { r =>
           val can = canaryMs()
           canaries += can
@@ -250,7 +249,10 @@ object Bench {
           val t0 = System.nanoTime()
           val ok =
             try { fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ()); true }
-            catch { case _: Throwable => false }
+            catch { case e: Throwable =>
+              if (error.isEmpty) error = Some(e)
+              false
+            }
           val sec = (System.nanoTime() - t0) / 1e9
           val steal = for {
             (s0, tt0) <- j0
@@ -273,14 +275,14 @@ object Bench {
         // sentinel inside min would let one transient failure mask two
         // good runs and corrupt the total)
         val stats =
-          if (runsData.isEmpty) QueryStats(-1.0, None, None, None)
+          if (runsData.isEmpty) QueryStats(-1.0, None, None, None, error)
           else {
             val best = runsData.minBy(_._1)
             QueryStats(best._1,
               { val ss = runsData.flatMap(_._2)
                 if (ss.isEmpty) None else Some(ss.max) },
               Some(runsData.map(_._3).max),
-              best._4)
+              best._4, error)
           }
         name -> stats
       }
@@ -339,11 +341,7 @@ object Bench {
       // gate per BASELINE.md protocol: >2x frozen AND >0.3s absolute
       // (sub-0.3s deltas are documented host noise); only meaningful when
       // benching the baseline's own SF.
-      // basename compare (not endsWith): a trailing slash in the env var
-      // must not silently disable the gate, and an unrelated dir whose
-      // name merely ends in "sf0.1" must not wrongly enable it
-      val gated = if (sfDir.split('/').filter(_.nonEmpty).lastOption
-          .contains("sf0.1")) {
+      val gated = if (isGradedSf(sfDir)) {
         val ratios = results.collect {
           case (n, t) if t >= 0 && base.contains(n) => (n, t / base(n), t - base(n))
         }
@@ -387,13 +385,15 @@ object Bench {
     // sidecar in the working directory (the repo root in driver runs),
     // merged with the per-query map: one self-contained JSON object the
     // driver/judge can read without any stdout parsing.
-    val merged = summary.dropRight(1) + s""","queries":$qs}"""
-    // Sink routing (round-11 verdict item 1): BENCH_LAST.json always;
-    // BENCH_SUMMARY.json ONLY from a full-suite quiet-protocol run.
-    // Targeted-filter clobbering bit round 8; hot-session clobbering bit
-    // round 10 — summarySinks (spec-gated) encodes both scars.
-    summarySinks(only.nonEmpty,
-        sys.env.get("SPARK_GRAFT_BENCH_PROTOCOL")).foreach { f =>
+    // plus, when some query failed, why (first failure per query)
+    val merged = summary.dropRight(1) +
+      errorsFragment(detailed.flatMap { case (n, s) => s.error.map(n -> _) }) +
+      s""","queries":$qs}"""
+    // Sink routing (spec-gated in summarySinks): BENCH_SMOKE.json off the
+    // graded SF; else BENCH_LAST.json, plus BENCH_SUMMARY.json ONLY from
+    // a full-suite quiet-protocol run.
+    summarySinks(only.nonEmpty, sys.env.get("SPARK_GRAFT_BENCH_PROTOCOL"),
+        isGradedSf(sfDir)).foreach { f =>
       java.nio.file.Files.write(java.nio.file.Paths.get(f),
         (merged + "\n").getBytes("UTF-8"))
     }

@@ -1,35 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Paired same-JVM A/B harness for a runtime SQL conf (r15 optimization
-  * round): runs each named query alternating the conf between two values
-  * WITHIN one session, pairing arms back-to-back so host drift (the
-  * documented steal-storm class) hits both arms of a pair nearly equally.
+/** Paired same-JVM A/B harness for a runtime SQL conf: runs each named
+  * query alternating the conf between two values WITHIN one session,
+  * pairing arms back-to-back so host drift (the documented steal-storm
+  * class) hits both arms of a pair nearly equally.
   * Reports per-pair times and the median paired ratio — the effect-size
   * estimate an unpaired storm-day session cannot give.
   *
   * Usage: runMain graft.ExpPairedConf <confKey> <valA> <valB> <pairs>
   *          <query1,query2,...>
-  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (Bench's contract).
+  * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (Bench's contract). The
+  * session is Bench's (`GraftSession.forTool`).
   */
 object ExpPairedConf {
   def main(args: Array[String]): Unit = {
     val Array(key, valA, valB, pairsStr, names) = args
     val pairs = pairsStr.toInt
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.forTool("graft-exp")
     spark.sparkContext.setLogLevel("ERROR")
     graft.multimodal.BinaryPipeline.assertGradedCorpusOrAudit("exp")
     // warm-up (Bench's): codegen + parquet reader + canary JIT

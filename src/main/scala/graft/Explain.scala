@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit tool: prints the formatted physical plan for each named
   * query (all queries if none named). Usage:
   *   runMain graft.Explain <sfDir> [queryName ...]
@@ -13,18 +11,17 @@ import org.apache.spark.sql.SparkSession
   * bytes/records (summed from per-task metrics via a SparkListener):
   * the number a shuffle-volume claim ("payload X no longer rides
   * exchange Y") must cite, since plan text shows shape but not bytes.
-  * Executed runs also count TASKS (r16): partition-scoping claims
-  * ("the loop now runs 8-way, not 32-way") are invisible in a
-  * localCheckpoint-terminated query's final plan — the r15 s16 evidence
-  * gap — but the total task count measures them directly.
+  * Executed runs also count TASKS: partition-scoping claims ("the loop
+  * now runs 8-way, not 32-way") are invisible in a
+  * localCheckpoint-terminated query's final plan, but the total task
+  * count measures them directly.
   *
-  * SPARK_GRAFT_CPUS sizes the session (master local[n] + n shuffle
-  * partitions; default 4 — set 32 to mirror the graded bench session,
-  * where the scale-adaptive partition derivations actually diverge from
-  * the session width). SPARK_GRAFT_EXPLAIN_CONF="k=v;k=v" sets runtime
-  * confs after session build — the hook that dumps a BEFORE arm through
-  * the engine's own override knobs (graft.shufflePartitions=32,
-  * graft.st17LegacySink=true) without checking out old code.
+  * The session is `GraftSession.forTool`: SPARK_GRAFT_CPUS sizes it
+  * (master local[n] + n shuffle partitions; default the available
+  * processors — set 32 to mirror a 32-core bench session, where the
+  * scale-adaptive partition derivations diverge from the session
+  * width). A one-off conf for a BEFORE/AFTER dump goes through
+  * SPARK_GRAFT_JAVA_OPTS=-Dspark.… (build.sbt).
   */
 object Explain {
   /** Sums shuffle write volume across all tasks between reset() calls.
@@ -55,22 +52,8 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
     val run = sys.env.get("SPARK_GRAFT_EXPLAIN_RUN").contains("1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.forTool("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
-    sys.env.get("SPARK_GRAFT_EXPLAIN_CONF").foreach {
-      _.split(';').map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      }
-    }
     val meter = new ShuffleMeter
     if (run) spark.sparkContext.addSparkListener(meter)
     names.foreach { n =>

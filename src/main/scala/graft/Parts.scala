@@ -1,49 +1,44 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Scale-adaptive shuffle-partition sizing for operator-internal stages
-  * (r16 optimization round).
+/** Scale-adaptive shuffle-partition sizing for operator-internal stages,
+  * and the one scoped session-conf helper the operators use to apply it.
   *
-  * The problem (guide §2.2/§2.4, PERF_r15's scaling block): a shuffle's
-  * reduce-partition count should follow the DATA VOLUME crossing it, not
-  * the session's core count. The iterative operators (graph rounds, the
-  * dedup label propagation) and the tiny post-kernel rollups run their
-  * per-round joins/aggregations over KB–MB relations, yet inherit the
-  * session's `spark.sql.shuffle.partitions` (= cores locally, thousands
-  * on a cluster) — hundreds of near-empty tasks and M×R shuffle blocks
-  * per round whose scheduling/fetch overhead dominates below ~10⁵ rows
-  * per stage. AQE coalescing does NOT recover this (measured r16,
-  * plans/r16/exp_parfirst_inv.log, medians 0.94–1.16 ≈ noise): coalescing
-  * merges the reduce READS but the map side still writes R-way blocks,
-  * checkpointed RDDs freeze whatever count materialized, and
-  * `parallelismFirst` refuses to shrink below the session parallelism.
+  * A shuffle's reduce-partition count should follow the DATA VOLUME
+  * crossing it, not the session's core count. The iterative operators
+  * (graph rounds, the dedup label propagation) and the tiny post-kernel
+  * rollups run their per-round joins/aggregations over KB–MB relations,
+  * yet inherit the session's `spark.sql.shuffle.partitions` (= cores
+  * locally, thousands on a cluster) — hundreds of near-empty tasks and
+  * M×R shuffle blocks per round whose scheduling/fetch overhead dominates
+  * below ~10⁵ rows per stage. AQE coalescing does not recover this
+  * (plans/r16/exp_parfirst_inv.log): coalescing merges the reduce READS
+  * but the map side still writes R-way blocks, checkpointed RDDs freeze
+  * whatever count materialized, and `parallelismFirst` refuses to shrink
+  * below the session parallelism.
   *
-  * The fix is the streaming round's `statePartitions` discipline applied
-  * to batch internals: the operator derives the partition count from the
-  * relation it is about to iterate/aggregate — rows / rows-per-partition,
-  * clamped to [1, session] — so small inputs get few partitions locally
-  * while corpus-scale inputs keep the deployer's full width (the clamp
-  * cap). Nothing is tuned to the core count: the same formula that gives
-  * 8 partitions for the 1.2M-row sf0.1 trade-edge relation gives the
-  * session's own width once rows/target exceeds it (sf10 already caps).
-  *
-  * `graft.shufflePartitions` (session conf) overrides the derivation
-  * everywhere — the runtime sweep hook for the paired A/B harness and
-  * the production escape hatch, exactly like `graft.statePartitions`.
+  * So the operator derives the partition count from the relation it is
+  * about to iterate/aggregate — rows / rows-per-partition, clamped to
+  * [1, session] — and streaming state stores derive theirs from source
+  * bytes. Small inputs get few partitions locally while corpus-scale
+  * inputs keep the deployer's full width (the clamp cap): the formula
+  * that gives 8 partitions for the 1.2M-row sf0.1 trade-edge relation
+  * gives the session's own width once rows/target exceeds it.
   */
 object Parts {
 
-  /** One lock for every scoped mutation of the session's
-    * shuffle-partitions conf (batch loop scoping here, streaming state
-    * scoping in StreamQueries): scoped set/restore of a SESSION conf is
-    * only atomic if every writer serializes on the SAME monitor — two
-    * independent locks would let a batch scope and a streaming scope
-    * interleave their save/restore and leave the session conf wrong
-    * (the round-6 clobber scenario, now guarded engine-wide). */
-  private[graft] val lock = new Object
+  /** One lock for every scoped mutation of a session conf ([[withConfs]]):
+    * scoped set/restore is only atomic if every writer serializes on the
+    * SAME monitor — two independent locks would let two scopes
+    * interleave their save/restore and leave the session conf wrong. */
+  private val lock = new Object
 
-  private val OverrideKey = "graft.shufflePartitions"
+  private val ShufflePartitionsKey = "spark.sql.shuffle.partitions"
+
+  private def sessionWidth(spark: SparkSession): Long =
+    spark.conf.get(ShufflePartitionsKey).toLong
 
   /** Partition count for an operator-internal stage over `rows` rows:
     * ceil(rows / perPartition) clamped to [1, session shuffle
@@ -51,11 +46,8 @@ object Parts {
     * cost class (how many rows amortize one task's scheduling overhead
     * at that operator's per-row work), not a global constant. */
   def forRows(spark: SparkSession, rows: Long, perPartition: Long): Int =
-    overrideOr(spark) {
-      val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      math.max(1L, math.min(session.toLong,
-        (rows + perPartition - 1) / perPartition)).toInt
-    }
+    math.max(1L, math.min(sessionWidth(spark),
+      (rows + perPartition - 1) / perPartition)).toInt
 
   /** Same clamp for a stage whose volume is known only as input BYTES
     * (streaming sources sized before any job runs): floor is the
@@ -63,47 +55,39 @@ object Parts {
     * cap is the session width. */
   def forBytes(spark: SparkSession, bytes: Long, perPartitionBytes: Long,
       floor: Int): Int =
-    overrideOr(spark) {
-      val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      math.max(floor.toLong, math.min(session.toLong,
-        (bytes + perPartitionBytes - 1) / perPartitionBytes)).toInt
-    }
+    math.max(floor.toLong, math.min(sessionWidth(spark),
+      (bytes + perPartitionBytes - 1) / perPartitionBytes)).toInt
 
-  private def overrideOr(spark: SparkSession)(derive: => Int): Int =
-    spark.conf.getOption(OverrideKey) match {
-      case Some(v) if v != "auto" && v.toInt > 0 => v.toInt
-      case _ => derive
-    }
-
-  /** Recursive on-disk byte size of a table file/dir — the pre-job
-    * volume estimate `forBytes` consumes. */
-  def pathBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).map(walk).sum
-      else f.length()
-    walk(new java.io.File(path))
+  /** Recursive byte size of a table file or directory on whatever Hadoop
+    * filesystem its path names (local, hdfs, s3a, ...) — the pre-job
+    * volume estimate `forBytes` consumes. Hidden checksum files are not
+    * counted. */
+  def pathBytes(spark: SparkSession, path: String): Long = {
+    val p = new Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf())
+      .getContentSummary(p).getLength
   }
 
-  /** Run `f` — which must EXECUTE its jobs inside (localCheckpoint /
-    * streaming drain / eager collect), not merely build a lazy plan —
-    * with `spark.sql.shuffle.partitions` scoped to `n`, restoring the
-    * previous value after. Serialized on [[lock]]; reentrant (a scoped
-    * caller may call a scoped helper). The residual exposure — an
-    * unrelated concurrent batch query planned at n — does not arise
-    * under the driver protocol (Verify/Bench/ScalaTest run queries
-    * sequentially); operators that DO run internal legs concurrently
+  /** Run `f` with each `(key, value)` set on the session conf, restoring
+    * every previous value (or unsetting it) afterwards, also when `f`
+    * throws. `f` must EXECUTE its jobs inside (localCheckpoint, streaming
+    * drain, eager collect), not merely build a lazy plan. Serialized on
+    * [[lock]] and reentrant, so a scoped caller may call a scoped helper.
+    * While a scope is open, an unrelated query on the same session also
+    * sees the scoped values; Verify, Bench and ScalaTest run queries
+    * sequentially, and operators that run internal legs concurrently
     * (d16) take one scope around all legs. */
-  def withShufflePartitions[A](spark: SparkSession, n: Int)(f: => A): A =
+  def withConfs[A](spark: SparkSession, confs: (String, String)*)(f: => A): A =
     lock.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, n.toString)
-      try f finally {
-        prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None    => spark.conf.unset(key)
-        }
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try f finally prev.reverse.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None)    => spark.conf.unset(k)
       }
     }
+
+  /** [[withConfs]] for `spark.sql.shuffle.partitions` = `n`. */
+  def withShufflePartitions[A](spark: SparkSession, n: Int)(f: => A): A =
+    withConfs(spark, ShufflePartitionsKey -> n.toString)(f)
 }

@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** Per-micro-batch cost profiler for the streaming surface (round-5
-  * verdict task 5): runs the named streaming queries and prints each
-  * micro-batch's duration breakdown (triggerExecution / addBatch /
+/** Per-micro-batch cost profiler for the streaming surface: runs the
+  * named streaming queries and prints each micro-batch's duration
+  * breakdown (triggerExecution / addBatch /
   * getBatch / walCommit / stateMemory) from the engine's progress
   * events — the evidence for the "is the floor irreducible engine
   * overhead?" question. Usage:
@@ -14,20 +13,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 object StreamDiag {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // mirror the bench/verify session (shared default): a diagnosis
-      // run with the Spark-default checksums ON would mis-attribute the
-      // per-batch floor
-      .config(GraftSession.CkptChecksumKey, GraftSession.ckptChecksumDefault)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forTool("graft-streamdiag")
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(
           e: StreamingQueryListener.QueryStartedEvent): Unit = ()

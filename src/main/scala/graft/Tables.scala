@@ -27,13 +27,7 @@ final case class Tables(spark: SparkSession, dir: String) {
     * operators and oracles see identical values regardless of generation.
     */
   def events: DataFrame = {
-    // nanosAsLong is set at build time by every session builder in this
-    // library (GraftSession / Verify / Bench / Explain); this fallback
-    // only fires for a caller-supplied session that lacks it, since the
-    // conf is read at scan planning and the read fails without it.
-    if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-          .forall(_ != "true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    Tables.ensureNanosAsLong(spark)
     Tables.normalizeTs(table("events"))
   }
   def documents: DataFrame  = table("documents")
@@ -74,6 +68,16 @@ final case class Tables(spark: SparkSession, dir: String) {
 }
 
 object Tables {
+  private val NanosAsLongKey = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** Every events read (batch facade, stream, replay builder) needs the
+    * nanosAsLong legacy conf: it is read at scan planning and the
+    * TIMESTAMP(NANOS) generation fails without it. `GraftSession.build`
+    * sets it; this sets it on a caller-supplied session that lacks it. */
+  private[graft] def ensureNanosAsLong(spark: SparkSession): Unit =
+    if (!spark.conf.getOption(NanosAsLongKey).contains("true"))
+      spark.conf.set(NanosAsLongKey, "true")
+
   /** Normalizes the events `ts` column to a microsecond TimestampType
     * regardless of how the parquet stores it: a raw nano LONG (the
     * TIMESTAMP(NANOS) generation, read under the nanosAsLong legacy conf)

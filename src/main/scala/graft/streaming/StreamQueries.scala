@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.storage.StorageLevel
 
+import graft.Parts.withShufflePartitions
+
 /** Driver-graded Structured Streaming queries (SURVEY §2 st01–st18).
   *
   * Every entry runs the FULL streaming engine path — FileStreamSource →
@@ -44,9 +46,7 @@ object StreamQueries {
     * footer-only schema probe (streaming sources require an explicit
     * schema). */
   private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-          .forall(_ != "true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.Tables.ensureNanosAsLong(spark)
     val path = s"$dir/events.parquet"
     val schema = spark.read.parquet(path).schema
     // FileStreamSource requires a directory base path: when the table is a
@@ -154,9 +154,7 @@ object StreamQueries {
       s"${spark.sparkContext.applicationId}:$dir:" +
         sentinelTypes.mkString(","),
       graft.Tables.fingerprint(s"$dir/events.parquet")) {
-      if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-            .forall(_ != "true"))
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      graft.Tables.ensureNanosAsLong(spark)
       val raw = spark.read.parquet(s"$dir/events.parquet")
       val cols = raw.columns.map(col)
       // ordering position + jitter in the SOURCE ts unit (raw nanos for
@@ -227,104 +225,30 @@ object StreamQueries {
     }
   }
 
-  /** Run `f` (which must START AND DRAIN its streaming query inside)
-    * with `spark.sql.shuffle.partitions` scoped down to `n` — the
-    * state-store sizing knob for the multi-batch queries. Every
-    * stateful operator instantiates one state store PER shuffle
-    * partition PER micro-batch, and each store's commit writes+fsyncs a
-    * delta file: at 32 partitions the st04 profile showed ~70–180 s of
-    * aggregate state-commit time per batch against ~10 K state rows —
-    * pure per-instance overhead, 0.3 MB of actual state. Production
-    * sizes this to state volume (state rows / target rows-per-store);
-    * the graded corpus carries O(users)=O(10⁴) state rows, for which
-    * even 8 stores are more parallelism than data — the r15 paired
-    * sweep (plans/r15/exp_sp4.log, exp_sp4b.log) read 4 ≤ 8 on every
-    * stateful query (st04 0.815, st07 0.837, st14/st15 ~0.91), so 4 is
-    * the local default; `graft.statePartitions` overrides at runtime.
-    * The override is scoped: the conf is read at query START, and the
-    * surrounding batch plans (sink post-aggregations, oracles) still
-    * run at the session's 32. */
-  /** State-store BACKEND selection for the stateful queries (round-6
-    * verdict item 5 — the backend matrix): by default the queries run on
-    * whatever the session configures (Spark's HDFSBackedStateStoreProvider
-    * unless overridden; st06 always forces RocksDB as the
-    * transformWithState requirement), and setting
-    * `SPARK_GRAFT_STATE_BACKEND=rocksdb` reruns the WHOLE stateful
-    * surface (st02/st04/st07/st08/st12/st14/st15 — every
-    * withStatePartitions user) on RocksDBStateStoreProvider. The results
-    * must be IDENTICAL — the backend is a persistence/memory trade, never
-    * a semantics knob — which StreamingSpec's backend-matrix test pins
-    * (equal output + progress customMetrics proving which provider ran);
-    * the measured per-batch commit profiles live in SURVEY §8f. */
-  private val BackendKey = "spark.sql.streaming.stateStore.providerClass"
-  private val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** Scale-adaptive default for the state-store partition count (r16;
-    * the r15 constant 4 was flagged as a latent scale inversion). Stores
-    * are sized to the SOURCE volume feeding the stateful query — a
+  /** State-store partition count for a stateful query over `table`, set
+    * as `spark.sql.shuffle.partitions` around the query's start and
+    * drain (`withShufflePartitions`). Every stateful operator
+    * instantiates one state store PER shuffle partition PER micro-batch,
+    * and each store's commit writes+fsyncs a delta file: at 32 partitions
+    * the st04 profile showed ~70–180 s of aggregate state-commit time per
+    * batch against ~10 K state rows — pure per-instance overhead. Stores
+    * are therefore sized to the SOURCE volume feeding the query — a
     * monotone proxy for state volume (state rows are bounded by source
     * rows) knowable BEFORE any job runs: ceil(source bytes / 256 MB),
-    * floored at 4 (the commit-pipelining minimum below which the r15
-    * paired sweep measured no win at any probe SF) and capped at the
-    * session width. At every probe SF the derivation lands exactly on
-    * the hand-picked 4 the r15 receipts certified (events.parquet: 2 MB
-    * sf0.1 / 12 MB sf1 / 116 MB sf10), so those scale receipts carry
-    * over unchanged; a deployment whose per-snapshot source volume grows
-    * past ~1 GB scales stores toward its own session width instead of
-    * inheriting a test-box constant. `graft.statePartitions` still
-    * overrides everything at runtime (read in withStatePartitions). */
+    * floored at 4 (the commit-pipelining minimum below which the paired
+    * sweeps in plans/r15/exp_sp4*.log measured no win) and capped at the
+    * session width. events.parquet (2 MB sf0.1 / 12 MB sf1 / 116 MB
+    * sf10) derives 4 at every probe SF; a deployment whose per-snapshot
+    * source volume grows past ~1 GB scales stores toward its own session
+    * width. The scope covers only the streaming run: the surrounding
+    * batch plans (sink post-aggregations, oracles) run at the session
+    * width. */
   private val StateBytesPerPartition = 256L << 20
   private def stateParts(spark: SparkSession, dir: String,
       table: String): Int =
     graft.Parts.forBytes(spark,
-      graft.Parts.pathBytes(s"$dir/$table.parquet"),
+      graft.Parts.pathBytes(spark, s"$dir/$table.parquet"),
       StateBytesPerPartition, floor = 4)
-
-  /** The per-query `n` below is the LOCAL default; `graft.statePartitions`
-    * (session conf) overrides it — the scale-adaptive spelling (r15): a
-    * production deployment sets it to state rows / target rows-per-store
-    * instead of editing call sites, and the paired A/B harness can sweep
-    * it at runtime. */
-  private def withStatePartitions[A](spark: SparkSession, n: Int)(f: => A): A =
-    withStatePartitionsImpl(spark,
-      spark.conf.getOption("graft.statePartitions")
-        .map(_.toInt).getOrElse(n))(f)
-  private def withStatePartitionsImpl[A](spark: SparkSession, n: Int)(f: => A): A =
-    // Serialized on a global lock (round-6 advice): the override mutates
-    // the SESSION's shuffle-partitions conf for the duration of the
-    // streaming run, so two concurrent callers could otherwise clobber
-    // each other's saved previous value on restore (A saves 32 → sets 8;
-    // B saves 8 → A restores 32 → B "restores" 8, leaving the session
-    // wrong). The lock makes save/run/restore atomic; the residual
-    // exposure — an unrelated BATCH query on the same session planned at
-    // n while a streaming run holds the lock — does not arise under the
-    // driver protocol (Verify/Bench/ScalaTest run queries sequentially
-    // on the session), and a structurally isolated child session can't
-    // host these queries because several join the stream against
-    // batch-side relations built on the parent. The lock is SHARED with
-    // the batch loop-partition scoping (graft.Parts, r16): both mutate
-    // the same session conf, so independent monitors would reintroduce
-    // exactly the interleaved-restore hazard this comment describes.
-    graft.Parts.lock.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.getOption(key)
-      val prevBackend = spark.conf.getOption(BackendKey)
-      spark.conf.set(key, n.toString)
-      if (sys.env.get("SPARK_GRAFT_STATE_BACKEND")
-            .exists(_.equalsIgnoreCase("rocksdb")))
-        spark.conf.set(BackendKey, RocksDbProvider)
-      try f finally {
-        prev match {
-          case Some(v) => spark.conf.set(key, v)
-          case None    => spark.conf.unset(key)
-        }
-        prevBackend match {
-          case Some(v) => spark.conf.set(BackendKey, v)
-          case None    => spark.conf.unset(BackendKey)
-        }
-      }
-    }
 
   /** The normalized event stream over the shuffled multi-file replay:
     * one chunk per micro-batch, out-of-order across batches within the
@@ -349,7 +273,7 @@ object StreamQueries {
     // stores per micro-batch for O(windows×types) state rows. Paired
     // same-JVM A/B (plans/r15/exp_statepart.log): 0.676 median ratio.
     // Same scale rationale as st02/st04 (stores ∝ state volume, not CPUs).
-    withStatePartitions(spark, stateParts(spark, dir, "events")) {
+    withShufflePartitions(spark, stateParts(spark, dir, "events")) {
       runComplete(spark,
         EventsStream.windowedCounts(eventsStream(spark, dir)), "st01_windows")
     }.orderBy("hour_ts", "event_type")
@@ -368,7 +292,7 @@ object StreamQueries {
     * emits the fully-merged session set at end-of-stream. Oracle: q31's
     * SQL verbatim, batch-boundary-independent. */
   def st02(spark: SparkSession, dir: String): DataFrame = {
-    val sessions = withStatePartitions(spark, stateParts(spark, dir, "events")) {
+    val sessions = withShufflePartitions(spark, stateParts(spark, dir, "events")) {
       runCompleteDistributed(spark,
         EventsStream.sessionWindows(replayedEventsStream(spark, dir, Nil)),
         "st02_sessions")
@@ -409,7 +333,7 @@ object StreamQueries {
       .agg(count(lit(1)).as("n_users"))
     // 8 state partitions (r15): dedup state is O(users×types), the
     // aggregation O(types) — paired A/B 0.636 (exp_statepart.log)
-    withStatePartitions(spark, stateParts(spark, dir, "events")) {
+    withShufflePartitions(spark, stateParts(spark, dir, "events")) {
       runComplete(spark, deduped, "st03_dedup")
     }.orderBy("event_type")
   }
@@ -452,7 +376,7 @@ object StreamQueries {
     // the 10 min join window) — so append-mode output must equal the
     // batch self-join whatever the batch boundaries.
     val name = s"st04_join_${sinkId.incrementAndGet()}"
-    withStatePartitions(spark, stateParts(spark, dir, "events")) {
+    withShufflePartitions(spark, stateParts(spark, dir, "events")) {
       val q = joined.writeStream
         .queryName(name)
         .outputMode("append")
@@ -487,7 +411,7 @@ object StreamQueries {
         sum(expr("cast(round(value * 100) as bigint)")).as("sum_value_cents"))
     // 8 state partitions (r15): aggregation state is O(nations)=25 rows
     // — paired A/B 0.741 (exp_statepart.log)
-    withStatePartitions(spark, stateParts(spark, dir, "events")) {
+    withShufflePartitions(spark, stateParts(spark, dir, "events")) {
       runComplete(spark, enriched, "st05_enrich")
     }.orderBy("n_name")
   }
@@ -509,43 +433,37 @@ object StreamQueries {
     * CDC-log + compaction shape). */
   def st06(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val ev = eventsStream(spark, dir)
-        .withColumn("value",
-          expr("cast(cast(round(value * 100) as bigint) as double)"))
-        .as[EventsStream.Event]
-      val out = graft.TempDirs.create("graft_st06_updates")
-      // 8 state partitions (r15): transformWithState keeps O(users)
-      // state rows; 32 RocksDB instances per batch was pure per-store
-      // overhead — paired A/B 0.681 (exp_statepart.log)
-      withStatePartitions(spark, stateParts(spark, dir, "events")) {
-        val q = EventsStream.runningStats(ev)
-          .toDF("user_id", "n_events", "cents")
-          .writeStream
-          .outputMode("update")
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            batch.withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(out)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      // update mode emits ≤1 row per (user, batch), so max_by picks the
-      // single row of each user's last touching batch — their final state
-      spark.read.parquet(out)
-        .groupBy("user_id")
-        .agg(expr("max_by(n_events, batch_id)").as("n_events"),
-          expr("max_by(cents, batch_id)").cast("long").as("sum_value_cents"))
-        .orderBy("user_id")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
+    val ev = eventsStream(spark, dir)
+      .withColumn("value",
+        expr("cast(cast(round(value * 100) as bigint) as double)"))
+      .as[EventsStream.Event]
+    val out = graft.TempDirs.create("graft_st06_updates")
+    // transformWithState requires the RocksDB provider; the state stores
+    // are sized like every other stateful query's (stateParts)
+    graft.Parts.withConfs(spark,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+        "spark.sql.shuffle.partitions" ->
+          stateParts(spark, dir, "events").toString) {
+      val q = EventsStream.runningStats(ev)
+        .toDF("user_id", "n_events", "cents")
+        .writeStream
+        .outputMode("update")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          batch.withColumn("batch_id", lit(batchId))
+            .write.mode("append").parquet(out)
+        }
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
     }
+    // update mode emits ≤1 row per (user, batch), so max_by picks the
+    // single row of each user's last touching batch — their final state
+    spark.read.parquet(out)
+      .groupBy("user_id")
+      .agg(expr("max_by(n_events, batch_id)").as("n_events"),
+        expr("max_by(cents, batch_id)").cast("long").as("sum_value_cents"))
+      .orderBy("user_id")
   }
 
   /** st07 — LEFT-OUTER stream-stream interval join, driver-graded: clicks
@@ -588,7 +506,7 @@ object StreamQueries {
         col("p_ts") <= col("c_ts") + expr("INTERVAL 10 MINUTES"),
       "left_outer")
     val out = graft.TempDirs.create("graft_st07_rows")
-    withStatePartitions(spark, stateParts(spark, dir, "events")) {
+    withShufflePartitions(spark, stateParts(spark, dir, "events")) {
       val q = joined.writeStream
         .outputMode("append")
         .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -635,7 +553,7 @@ object StreamQueries {
         col("event_type"), col("value"))
       .as[EventsStream.Event]
     val out = graft.TempDirs.create("graft_st08_sessions")
-    withStatePartitions(spark, stateParts(spark, dir, "events")) {
+    withShufflePartitions(spark, stateParts(spark, dir, "events")) {
       val q = EventsStream
         .sessionizeStateful(ev, ReplayJitterSec * 1000).toDF()
         .writeStream
@@ -737,7 +655,7 @@ object StreamQueries {
       .agg(count(lit(1)).as("n_unique"))
     // scoped partitions (r15): dedup+agg state is O(fps)+O(sources);
     // paired A/B 32→8 0.630, 8→4 0.934 (exp_fb8.log, exp_fb4.log)
-    withStatePartitions(spark, stateParts(spark, dir, "documents")) {
+    withShufflePartitions(spark, stateParts(spark, dir, "documents")) {
       runComplete(spark, survivors, "st10_curation")
     }.orderBy("source")
   }
@@ -865,7 +783,7 @@ object StreamQueries {
           out.iterator
       }
     val outDir = graft.TempDirs.create("graft_st14_pairs")
-    withStatePartitions(spark, stateParts(spark, dir, "documents")) {
+    withShufflePartitions(spark, stateParts(spark, dir, "documents")) {
       val q = hits.toDF()
         .writeStream
         .outputMode("append")
@@ -972,7 +890,7 @@ object StreamQueries {
           s"st15: $what did not terminate within ${RunTimeoutMs / 1000}s " +
             "— checkpoint recovery is wedged, refusing to grade")
       }
-    withStatePartitions(spark, stateParts(spark, dir, "events")) {
+    withShufflePartitions(spark, stateParts(spark, dir, "events")) {
       // phase-resolved timing (round-8 verdict item 5): the single st15
       // number hid which leg costs what — the pre-crash run scales with
       // history (it processes batches 0..crash), the recovery leg must
@@ -1368,7 +1286,7 @@ object StreamQueries {
       .agg(count(lit(1)).as("n_kept"), sum(col("n_tokens")).as("kept_tokens"))
     // scoped partitions (r15): agg state is O(sources)=20 rows; paired
     // A/B 32→8 0.682, 8→4 0.927 (exp_fb8.log, exp_fb4.log)
-    withStatePartitions(spark, stateParts(spark, dir, "documents")) {
+    withShufflePartitions(spark, stateParts(spark, dir, "documents")) {
       runComplete(spark, kept, "st11_sample")
     }.orderBy("source")
   }
@@ -1498,7 +1416,7 @@ object StreamQueries {
       .as[EventsStream.Event]
     val crossings = thresholdCrossings(ev, 100000L)
     val out = graft.TempDirs.create("graft_st12_alerts")
-    withStatePartitions(spark, stateParts(spark, dir, "events")) {
+    withShufflePartitions(spark, stateParts(spark, dir, "events")) {
       val q = crossings.toDF()
         .writeStream
         .outputMode("append")
@@ -1536,7 +1454,7 @@ object StreamQueries {
       .limit(10)
     // 8 state partitions (r15): aggregation state is O(users) —
     // paired A/B 0.690 (exp_statepart.log)
-    withStatePartitions(spark, stateParts(spark, dir, "events")) {
+    withShufflePartitions(spark, stateParts(spark, dir, "events")) {
       runComplete(spark, totals, "st13_leaderboard")
     }.orderBy(col("sum_value_cents").desc, col("user_id"))
   }
@@ -1624,7 +1542,7 @@ object StreamQueries {
         sum(col("csum")).as("content_sum"))
     // scoped partitions (r15): the rollup state is 4 rows, the decode is
     // map-side; paired A/B 32→8 0.551, 8→4 0.952 (exp_fb8/fb4.log)
-    withStatePartitions(spark, 4) {
+    withShufflePartitions(spark, 4) {
       runComplete(spark, agg, "st16_media")
     }.orderBy("modality", "container")
   }
@@ -1713,8 +1631,8 @@ object StreamQueries {
     // O(batch) rows and streaming plans get no AQE coalescing, so the
     // session's static 32 meant 32 tasks + 32 files per tiny stage
     // write; paired A/B 32→8 0.801, 8→4 0.995 (exp_fb8/fb4.log).
-    // Production sizes to batch volume via graft.statePartitions.
-    withStatePartitions(spark, stateParts(spark, dir, "documents")) {
+    // stateParts scales it with the corpus.
+    withShufflePartitions(spark, stateParts(spark, dir, "documents")) {
       admissionSession(spark, rd, rd + ".index", bench, out)
     }
     admissionStagesRollup(spark, out)
@@ -1806,14 +1724,6 @@ object StreamQueries {
     val q = writer
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val sp = batch.sparkSession
-        // graft.st17LegacyBaseFps=true restores the per-batch parquet
-        // re-read of the session-static standing index — the isolated
-        // paired-A/B arm for the checkpoint-once treatment above
-        // (plans/r16/exp_st17_basefps.log); same relation either way
-        val fps =
-          if (sp.conf.getOption("graft.st17LegacyBaseFps").contains("true"))
-            sp.read.parquet(standingIdx)
-          else baseFps
         // qual/novel persisted like p06's stages (r15): each feeds its
         // own stage sink AND the next stage's lineage, so unpersisted
         // the quality kernel re-ran 3x per batch (novel sink, uniq
@@ -1821,7 +1731,7 @@ object StreamQueries {
         // dominant per-batch term. Released after the sinks below.
         val qual = qualityFilter(batch).persist(StorageLevel.MEMORY_AND_DISK)
         val novel = qual.withColumn("fp", canon_fp(col("text")))
-          .join(fps, Seq("fp"), "left_anti").drop("fp")
+          .join(baseFps, Seq("fp"), "left_anti").drop("fp")
           .persist(StorageLevel.MEMORY_AND_DISK)
         // cross-batch dedup: probe the fps accumulated by PRIOR batches
         // (across ALL session tags — day 2 probes day 1's index too).
@@ -1902,26 +1812,13 @@ object StreamQueries {
             (if (withText) col("text") else lit(null).cast("string"))
               .as("text"),
             lit(stage).as("stage"))
-        // graft.st17LegacySink=true restores the five per-stage write
-        // jobs — the r16 paired-A/B arm (plans/r16/exp_st17_sink.log);
-        // the combined sink is the default
-        if (sp.conf.getOption("graft.st17LegacySink").contains("true")) {
-          def sink(df: DataFrame, stage: String, cols: Seq[String]): Unit =
-            df.select(cols.map(col): _*).write.mode("overwrite")
-              .parquet(s"${stageDir(stage)}/batch_$tag$batchId")
-          sink(batch, "incoming", Seq("doc_id", "source"))
-          sink(qual, "quality", Seq("doc_id", "source"))
-          sink(novel, "novel", Seq("doc_id", "source"))
-          sink(uniq, "uniq", Seq("doc_id", "source"))
-          sink(admitted, "admitted", Seq("doc_id", "source", "text"))
-        } else
-          staged(batch, "incoming", withText = false)
-            .unionByName(staged(qual, "quality", withText = false))
-            .unionByName(staged(novel, "novel", withText = false))
-            .unionByName(staged(uniq, "uniq", withText = false))
-            .unionByName(staged(admitted, "admitted", withText = true))
-            .write.mode("overwrite")
-            .parquet(s"${stageDir("stages")}/batch_$tag$batchId")
+        staged(batch, "incoming", withText = false)
+          .unionByName(staged(qual, "quality", withText = false))
+          .unionByName(staged(novel, "novel", withText = false))
+          .unionByName(staged(uniq, "uniq", withText = false))
+          .unionByName(staged(admitted, "admitted", withText = true))
+          .write.mode("overwrite")
+          .parquet(s"${stageDir("stages")}/batch_$tag$batchId")
         uniq.select(canon_fp(col("text")).as("fp")).distinct()
           .write.mode("overwrite")
           .parquet(s"${stageDir("seen_fps")}/batch_$tag$batchId")
@@ -1948,23 +1845,15 @@ object StreamQueries {
 
   /** p06's rollup over the combined stage dirs an [[admissionSession]]
     * (or several — multi-day state accumulates in place) populated:
-    * ONE scan of the per-batch stage relation, filtered five ways (the
-    * stage column replaces five per-stage dir reads — r16, paired with
-    * the combined sink above). */
+    * ONE scan of the per-batch stage relation, filtered five ways by
+    * its `stage` column. */
   private[graft] def admissionStagesRollup(
       spark: SparkSession, out: String): DataFrame = {
     val dirs = admissionBatchDirs(out, "stages")
+    require(dirs.nonEmpty, s"st17: admission wrote no stage batches under $out")
+    val staged = spark.read.parquet(dirs: _*)
     val Seq(incoming, qual, novel, uniq, admitted) =
-      if (dirs.nonEmpty) {
-        val staged = spark.read.parquet(dirs: _*)
-        AdmissionStages.map(s => staged.filter(col("stage") === s))
-      } else
-        // legacy per-stage dirs (the graft.st17LegacySink A/B arm)
-        AdmissionStages.map { s =>
-          val sd = admissionBatchDirs(out, s)
-          require(sd.nonEmpty, s"st17: stage $s produced no batches")
-          spark.read.parquet(sd: _*)
-        }
+      AdmissionStages.map(s => staged.filter(col("stage") === s))
     graft.pipeline.PipelineQueries
       .admissionRollup(incoming, qual, novel, uniq, admitted)
   }

@@ -9,30 +9,55 @@ import org.scalatest.funsuite.AnyFunSuite
   * scar — the 156.2 s validation-F record was overwritten by the
   * driver's 15%-steal session). Only quiet_bench.sh, which arms the
   * vmstat trace and sets SPARK_GRAFT_BENCH_PROTOCOL=quiet, may refresh
-  * it; every run still refreshes BENCH_LAST.json so the latest reading
-  * is always readable. */
+  * it; every graded-SF run still refreshes BENCH_LAST.json so the latest
+  * reading is always readable, and a smoke run at another SF writes
+  * BENCH_SMOKE.json instead. */
 class BenchSinkSpec extends AnyFunSuite {
+  private def sinks(targeted: Boolean, protocol: Option[String],
+                    gradedSf: Boolean = true) =
+    Bench.summarySinks(targeted, protocol, gradedSf)
 
   test("full-suite quiet-protocol run refreshes BOTH sidecars") {
-    assert(Bench.summarySinks(targeted = false, Some("quiet")) ==
+    assert(sinks(targeted = false, Some("quiet")) ==
       Seq("BENCH_LAST.json", "BENCH_SUMMARY.json"))
   }
 
   test("full-suite ad-hoc (driver/hot) run cannot touch BENCH_SUMMARY.json") {
-    assert(Bench.summarySinks(targeted = false, None) == Seq("BENCH_LAST.json"))
-    assert(Bench.summarySinks(targeted = false, Some("ad-hoc")) ==
-      Seq("BENCH_LAST.json"))
-    assert(Bench.summarySinks(targeted = false, Some("")) ==
-      Seq("BENCH_LAST.json"))
+    assert(sinks(targeted = false, None) == Seq("BENCH_LAST.json"))
+    assert(sinks(targeted = false, Some("ad-hoc")) == Seq("BENCH_LAST.json"))
+    assert(sinks(targeted = false, Some("")) == Seq("BENCH_LAST.json"))
   }
 
   test("targeted run cannot touch BENCH_SUMMARY.json even under the quiet protocol") {
     // quiet_bench.sh supports SPARK_GRAFT_BENCH_ONLY probes (the t16/t17
     // drift protocol) — those are valid quiet runs but not full-suite
     // records, so they must stay out of the canonical file too.
-    assert(Bench.summarySinks(targeted = true, Some("quiet")) ==
-      Seq("BENCH_LAST.json"))
-    assert(Bench.summarySinks(targeted = true, None) == Seq("BENCH_LAST.json"))
+    assert(sinks(targeted = true, Some("quiet")) == Seq("BENCH_LAST.json"))
+    assert(sinks(targeted = true, None) == Seq("BENCH_LAST.json"))
+  }
+
+  test("a run off the graded SF is a smoke run: BENCH_SMOKE.json only, " +
+    "never BENCH_LAST.json or BENCH_SUMMARY.json") {
+    for (targeted <- Seq(false, true);
+         protocol <- Seq(None, Some("quiet"), Some("ad-hoc")))
+      assert(sinks(targeted, protocol, gradedSf = false) ==
+        Seq("BENCH_SMOKE.json"))
+    // the same basename test the 2x gate uses
+    assert(Bench.isGradedSf("/data/sf0.1"))
+    assert(Bench.isGradedSf("/data/sf0.1/"))
+    assert(!Bench.isGradedSf("/data/sf0.001"))
+    assert(!Bench.isGradedSf("/data/xsf0.1"))
+  }
+
+  test("failed-query errors fragment: class and message per query, " +
+    "JSON-escaped; absent when nothing failed") {
+    assert(Bench.errorsFragment(Nil) == "")
+    val e = new IllegalStateException("bad \"q\" at C:\\tmp\nline 2")
+    val frag = Bench.errorsFragment(Seq("q01" -> e))
+    assert(frag == ""","errors":{"q01":"java.lang.IllegalStateException: """ +
+      """bad \"q\" at C:\\tmp\nline 2"}""")
+    assert(Bench.errorsFragment(Seq("a" -> e, "b" -> new RuntimeException("x")))
+      .endsWith(""","b":"java.lang.RuntimeException: x"}"""))
   }
 
   test("durable dump routing (r12 task 2b): full-suite runs write a " +

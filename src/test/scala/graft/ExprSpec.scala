@@ -8,33 +8,9 @@ class ExprSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** GraftSession.build()'s getOrCreate APPLIES its runtime confs to the
-    * pre-existing shared test session (Spark 3.4+ semantics) — e.g. its
-    * default shuffle-partition count is the box's core count, which
-    * silently flips the suite-wide session from TestSpark's 4 to 32 for
-    * every spec that runs after this one. Snapshot and restore the confs
-    * build() sets; this spec's subject is function registration, not
-    * session sizing. */
-  private def restoringBuildConfs[A](body: => A): A = {
-    val keys = Seq(
-      "spark.sql.shuffle.partitions",
-      "spark.sql.adaptive.enabled",
-      "spark.sql.adaptive.coalescePartitions.enabled",
-      "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.sources.partitionOverwriteMode",
-      "spark.sql.legacy.parquet.nanosAsLong",
-      "spark.sql.session.timeZone",
-      GraftSession.CkptChecksumKey)
-    val old = keys.map(k => k -> spark.conf.getOption(k))
-    try body finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("GraftSession front door registers every SQL function") {
-    // getOrCreate reuses the test session; confs restored right away
-    val s = restoringBuildConfs(GraftSession.build())
+    // TestSpark is built by GraftSession.build, the library front door
+    val s = spark
     val r = s.sql(
       """SELECT simhash64(array('a','b')) AS sh,
         | size(minhash_ngrams(array('a','b','c','d'), 3, 16, 42)) AS mh,
@@ -77,7 +53,6 @@ class ExprSpec extends AnyFunSuite {
       "aggregate(zip_with(a, b, (x, y) -> x * y), cast(0 as double), (acc, v) -> acc + v)")
       .head().getDouble(0)
     assert(fused == hof && fused == 1.0 * 4.0 + 2.0 * 0.5 + 3.0 * (-1.0))
-    graft.functions.GraftExtensions.register(spark)
     df.createOrReplaceTempView("dot_t")
     assert(spark.sql("SELECT dot_d(a, b) FROM dot_t").head().getDouble(0) == fused)
   }
@@ -124,7 +99,6 @@ class ExprSpec extends AnyFunSuite {
   }
 
   test("custom functions are SQL-callable after registration") {
-    graft.functions.GraftExtensions.register(spark)
     val r = spark.sql(
       """SELECT simhash64(array('a','b')) AS sh,
         |  size(minhash_sigs(array('x','y'), 16, 7)) AS k,
@@ -146,11 +120,6 @@ class ExprSpec extends AnyFunSuite {
       assert(r.getLong(2) <= r.getLong(1), "fingerprints <= hashes")
       assert(r.getLong(2) > 0)
     }
-  }
-
-  test("GraftSession front door registers SQL functions") {
-    val s = restoringBuildConfs(GraftSession.build(master = "local[4]"))
-    assert(s.sql("SELECT simhash64(array('x')) AS v").head().getLong(0) != 0L)
   }
 
   test("codegen and interpreted paths agree") {

@@ -1,9 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The r16 data-derived partition scoping: the derivation's clamp
-  * algebra, the override hook, the scoped set/restore, and — the part
+/** The data-derived partition scoping: the derivation's clamp algebra,
+  * Hadoop-path sizing, the scoped set/restore, and — the part
   * that matters for the graded operators — that a loop operator's
   * internally-executed rounds actually land at the derived count
   * instead of the session width. */
@@ -30,14 +34,42 @@ class PartsSpec extends AnyFunSuite {
     assert(Parts.forBytes(spark, 100L << 30, 256L << 20, floor = 4) === 4)
   }
 
-  test("graft.shufflePartitions overrides the derivation; auto restores it") {
-    spark.conf.set("graft.shufflePartitions", "3")
+  test("pathBytes sizes a file: URI through the Hadoop filesystem, for " +
+    "a single file and for a directory table") {
+    val dir = Files.createTempDirectory("graft_parts")
+    def localBytes(p: Path): Long =
+      Files.walk(p).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(Files.size).sum
     try {
-      assert(Parts.forRows(spark, 1L, 150000L) === 3)
-      assert(Parts.forBytes(spark, 0L, 1L, floor = 4) === 3)
-      spark.conf.set("graft.shufflePartitions", "auto")
-      assert(Parts.forRows(spark, 1L, 150000L) === 1)
-    } finally spark.conf.unset("graft.shufflePartitions")
+      val file = Files.write(dir.resolve("a.parquet"), Array.fill[Byte](1234)(1))
+      val table = Files.createDirectory(dir.resolve("t.parquet"))
+      Files.write(table.resolve("part-0"), Array.fill[Byte](100)(2))
+      Files.write(table.resolve("part-1"), Array.fill[Byte](50)(3))
+      assert(Parts.pathBytes(spark, file.toUri.toString) === 1234L)
+      assert(Parts.pathBytes(spark, table.toUri.toString) === localBytes(table))
+      assert(Parts.pathBytes(spark, dir.toUri.toString) === localBytes(dir))
+    } finally
+      Files.walk(dir).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+  }
+
+  test("withConfs scopes several keys and restores set and unset ones, " +
+    "even on throw") {
+    val set = "spark.sql.shuffle.partitions"
+    val unset = "spark.graft.test.scoped"
+    val before = spark.conf.get(set)
+    assert(spark.conf.getOption(unset).isEmpty)
+    val seen = Parts.withConfs(spark, set -> "3", unset -> "x") {
+      spark.conf.get(set) -> spark.conf.get(unset)
+    }
+    assert(seen === ("3" -> "x"))
+    assert(spark.conf.get(set) === before)
+    assert(spark.conf.getOption(unset).isEmpty)
+    intercept[RuntimeException] {
+      Parts.withConfs(spark, set -> "3", unset -> "x")(
+        throw new RuntimeException("x"))
+    }
+    assert(spark.conf.get(set) === before)
+    assert(spark.conf.getOption(unset).isEmpty)
   }
 
   test("withShufflePartitions scopes and restores, even on throw") {

@@ -34,11 +34,11 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(plan.contains("BroadcastNestedLoopJoin"),
       s"the 1-row aggregate side should broadcast back:\n$plan")
     // control: the identical frame WITHOUT the rule plans the
-    // single-partition Window — the hazard the rule exists to remove
-    val saved = spark.experimental.extraOptimizations
-    try {
-      spark.experimental.extraOptimizations =
-        saved.filterNot(_ == graft.plans.GlobalWindowToAgg)
+    // single-partition Window — the hazard the rule exists to remove.
+    // The session injects the rule as an extension, so it is excluded
+    // by name for the scope of the control plan.
+    Parts.withConfs(spark, "spark.sql.optimizer.excludedRules" ->
+        graft.plans.GlobalWindowToAgg.ruleName) {
       val naive = TestSpark.tables.lineitem
         .groupBy(org.apache.spark.sql.functions.col("l_returnflag"))
         .count()
@@ -48,7 +48,28 @@ class PlanAuditSpec extends AnyFunSuite {
         .queryExecution.executedPlan.toString
       assert(naive.contains("Window") && naive.contains("SinglePartition"),
         s"control plan should single-task without the rule:\n$naive")
-    } finally spark.experimental.extraOptimizations = saved
+    }
+  }
+
+  test("source gate: GraftSession.build is the only session builder, and " +
+    "no graft.* session conf is read as a knob in src/main") {
+    import scala.jdk.CollectionConverters._
+    def hits(root: String, needle: String): Seq[String] = {
+      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try files.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .toList.flatMap { f =>
+          java.nio.file.Files.readAllLines(f).asScala.zipWithIndex.collect {
+            case (l, i) if l.contains(needle) => s"$f:${i + 1}"
+          }
+        }
+      finally files.close()
+    }
+    val builders = hits("src", "SparkSession" + ".builder")
+      .filterNot(_.contains("/GraftSession.scala:"))
+    assert(builders.isEmpty,
+      s"sessions must be built by GraftSession.build: $builders")
+    val knobs = hits("src/main", "conf.getOption(\"" + "graft.")
+    assert(knobs.isEmpty, s"graft.* session-conf knobs in src/main: $knobs")
   }
 
   test("q95 plans the custom AsOfJoinExec over two sorted hash " +
